@@ -101,6 +101,12 @@ def track_point_params(
       ~30 kn; last point inherits 0 (reference pads the final segment).
     - dp_dt (hPa/h): central-pressure tendency from lag (W1/W7).
     - rmw_km, b_s as above.
+
+    ``time_col`` is read as a 6-HOUR step index: segment durations are
+    Δstep × 6.0 hours. Callers that index a 30-minute resample by
+    half-hour steps (perfbench's windfield_envelope, bench_event.py)
+    therefore get v_trans and dp_dt 12× too low, and with them b_s;
+    correcting that changes their outputs and evaluated pair counts.
     """
     keys = keys or ["ens_id"]
     w = Window.partitionBy(*keys).orderBy(time_col)
@@ -336,6 +342,35 @@ def grid_prune_pairs(
     )
 
 
+def _fenced(
+    pairs: DataFrame, keep: list[str], value: Column, name: str
+) -> DataFrame:
+    """``pairs`` projected to ``keep`` plus ``value`` as column ``name``,
+    behind a generator fence.
+
+    Catalyst rewrites a filter through deterministic projects by alias
+    substitution and re-derives it below via constraint propagation,
+    so a threshold on an expensive per-pair expression would otherwise
+    land in the JOIN CONDITION with the whole tree inlined and run on
+    every raw candidate (windfield vectors: 34 s vs 4 s, measured).
+    ``explode(array(x))`` is a row-preserving generator it cannot
+    substitute through.
+
+    The generator's argument must be a precomputed column, never the
+    expression itself: the Generate node does no common-subexpression
+    elimination, and the Column builders inline shared terms by value
+    (the Holland tree carries the haversine 6×, the shape ``pow`` 2×,
+    ``sin(radians(lat))`` 3×). The ``select`` below the fence is a
+    whole-stage-codegen projection, whose subexpression elimination
+    evaluates each repeated term once per pair. Same operations in the
+    same order, so the values are bit-identical to the inline form.
+    """
+    staged = pairs.select(*keep, value.alias(f"__{name}"))
+    return staged.select(
+        *keep, F.explode(F.array(F.col(f"__{name}"))).alias(name)
+    )
+
+
 def equirect_km(
     lat1: Column, lon1: Column, lat2: Column, lon2: Column
 ) -> Column:
@@ -426,19 +461,10 @@ def windfield_expr(
         r_km, F.col("rmw_km"), F.col("b_s"),
         F.col("penv"), F.col("pcen"), F.col("t_lat"), F.col("v_trans_ms"),
     )
-    # Same generator fence as windfield_vectors (see the long note
-    # there): without it Catalyst substitutes the threshold filter into
-    # the join condition with the full Holland tree inlined, so every
-    # raw bbox candidate pays trig/pow/exp once in the condition and
-    # again in the project. explode(array(wind)) materializes the wind
-    # exactly once per bbox-surviving pair; the join condition stays
-    # the cheap bbox comparison.
-    staged = pairs.select(
-        *keys,
-        "step",
-        "centroid_id",
-        F.explode(F.array(wind)).alias("wind_ms"),
-    )
+    # generator fence over a precomputed column (see _fenced): the
+    # threshold filter stays out of the join condition, and the
+    # Holland tree is evaluated once per bbox-surviving pair
+    staged = _fenced(pairs, [*keys, "step", "centroid_id"], wind, "wind_ms")
     return staged.filter(F.col("wind_ms") > threshold_ms)
 
 
@@ -523,11 +549,9 @@ def windfield_willoughby(
         F.col("c_lat"), F.col("c_lon"), F.col("t_lat"), F.col("t_lon")
     )
     wind = willoughby_wind_ms(r_km, F.col("vmax"), F.col("t_lat"))
-    # generator fence: keep the profile out of the join condition
-    # (same rationale as windfield_expr)
-    return pairs.select(
-        *keys, "step", "centroid_id",
-        F.explode(F.array(wind)).alias("wind_ms"),
+    # generator fence over a precomputed column (see _fenced)
+    return _fenced(
+        pairs, [*keys, "step", "centroid_id"], wind, "wind_ms"
     ).filter(F.col("wind_ms") > threshold_ms)
 
 
@@ -621,21 +645,16 @@ def windfield_vectors(
     atten = F.least(
         F.lit(1.0), F.col("rmw_km") / F.col("r_km")
     ) * F.col("v_trans_ms")
-    # Generate barrier around the expensive physics: Catalyst rewrites
-    # filters through deterministic projects by alias substitution and
-    # re-derives them below via constraint propagation, so without a
-    # barrier the speed threshold lands in the nested-loop JOIN
-    # CONDITION with the full Holland tree inlined ≈8× and evaluated
-    # per candidate pair without common-subexpression elimination —
-    # measured 34 s vs 4 s on this pair space. explode(array(v_g)) is a
-    # row-preserving generator Catalyst cannot substitute through: the
+    # generator fence over a precomputed column (see _fenced): the
     # gradient wind is computed exactly once per pair, and everything
-    # above (u/v/speed, the threshold, quantization) is cheap
-    # arithmetic over the materialized column.
-    staged = pairs.select(
-        *keys, "step", "centroid_id", "dx", "dy", "r_km",
-        "t_lat", "rmw_km", "v_trans_ms", "hx", "hy",
-        F.explode(F.array(v_g)).alias("v_g"),
+    # above (u/v/speed, the threshold) is cheap arithmetic over the
+    # materialized column
+    staged = _fenced(
+        pairs,
+        [*keys, "step", "centroid_id", "dx", "dy", "r_km",
+         "t_lat", "rmw_km", "v_trans_ms", "hx", "hy"],
+        v_g,
+        "v_g",
     )
     scored = (
         staged.withColumn(

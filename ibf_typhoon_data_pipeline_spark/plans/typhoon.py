@@ -3954,12 +3954,13 @@ _ASym_INFLOW_SQL = (
 )
 _ASym_SWD_SQL = _mod360(f"gwd + ({_ASym_INFLOW_SQL}) + 20.0")
 _ASym_CF_SQL = "(rmax * r) / (rmax * rmax + r * r)"
+# surface wind over the staged swd (= _ASym_SWD_SQL) and cf
+# (= _ASym_CF_SQL) columns: each is used twice, and staging it once
+# is the same arithmetic in the same order
 _ASym_WIND_SQL = (
     "greatest(sqrt("
-    f"pow(wind_sym * cos(radians({_ASym_SWD_SQL})) + ({_ASym_CF_SQL})"
-    " * tcspd_u, 2)"
-    f" + pow(wind_sym * sin(radians({_ASym_SWD_SQL})) + ({_ASym_CF_SQL})"
-    " * tcspd_v, 2)), 0.0)"
+    "pow(wind_sym * cos(radians(swd)) + cf * tcspd_u, 2)"
+    " + pow(wind_sym * sin(radians(swd)) + cf * tcspd_v, 2)), 0.0)"
 )
 _ASym_HAV_LEAD_SQL = (
     "2 * 6367.0 * asin(sqrt("
@@ -4027,8 +4028,10 @@ _ASym_CHEAD_SQL = _bearing_sql("lat", "lon", "c_lat", "(-c_lon)")
       SELECT *, {_ASym_CHEAD_SQL} AS chead FROM sym
     ), gw AS (
       SELECT *, {_mod360('90.0 + chead')} AS gwd FROM dirn
+    ), stg AS (
+      SELECT *, {_ASym_SWD_SQL} AS swd, {_ASym_CF_SQL} AS cf FROM gw
     ), surf AS (
-      SELECT ens_id, centroid_id, {_ASym_WIND_SQL} AS wind_sfc FROM gw
+      SELECT ens_id, centroid_id, {_ASym_WIND_SQL} AS wind_sfc FROM stg
     )
     SELECT ens_id, centroid_id,
            CAST(count(*) AS BIGINT) AS n_steps,
@@ -4083,9 +4086,11 @@ def tc_windfield_asymmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle is value-identical because only sub-threshold pairs are
     # dropped. The final wind expression sits behind a generator
     # fence so the 17.5 filter can't alias-substitute the whole trig
-    # chain into the join condition.
+    # chain into the join condition; the fence explodes a precomputed
+    # column (the generator does no subexpression elimination).
     from ibf_typhoon_data_pipeline_spark.operators.windfield import (
         _extent_col,
+        _fenced,
         _willoughby_extent_kernel,
         grid_prune_pairs,
     )
@@ -4127,15 +4132,16 @@ def tc_windfield_asymmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
         " + cos(radians(c_lat)) * cos(radians(t_lat))"
         " * pow(sin(radians(t_lon - c_lon) / 2), 2))), 0.1) AS r",
     )
-    surf = (
+    staged = (
         pairs.selectExpr("*", f"{_ASym_PROFILE_SQL} AS wind_sym")
         .selectExpr("*", f"{_ASym_CHEAD_SQL} AS chead")
         .selectExpr("*", f"{_mod360('90.0 + chead')} AS gwd")
-        .select(
-            "ens_id",
-            "centroid_id",
-            F.explode(F.array(F.expr(_ASym_WIND_SQL))).alias("wind_sfc"),
+        .selectExpr(
+            "*", f"{_ASym_SWD_SQL} AS swd", f"{_ASym_CF_SQL} AS cf"
         )
+    )
+    surf = _fenced(
+        staged, ["ens_id", "centroid_id"], F.expr(_ASym_WIND_SQL), "wind_sfc"
     )
     return (
         surf.filter(F.col("wind_sfc") > 17.5)

@@ -49,6 +49,54 @@ def test_windfield_is_broadcast_grid_join_with_partial_agg(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_windfield_fences_explode_a_precomputed_column(spark):
+    """Each windfield profile sits behind an explode(array(..))
+    generator fence, and the fence must explode a BARE attribute
+    computed in the projection below it. GenerateExec does no
+    subexpression elimination: a fence over the inline Holland tree
+    evaluates the haversine 6x, the shape pow 2x and sin(radians(lat))
+    3x per pair, where the codegen projection shares each once."""
+    import re
+
+    from ibf_typhoon_data_pipeline_spark.operators.windfield import (
+        windfield_expr,
+        windfield_vectors,
+        windfield_willoughby,
+    )
+    from ibf_typhoon_data_pipeline_spark.plans.typhoon import (
+        gen_centroids,
+        gen_tracks,
+    )
+
+    tracks = gen_tracks(spark)
+    cents = gen_centroids(spark).select("centroid_id", "lat", "lon")
+    frames = {
+        "windfield_expr/geosphere": windfield_expr(tracks, cents),
+        "windfield_expr/equirect": windfield_expr(
+            tracks, cents, metric="equirect"
+        ),
+        "windfield_vectors": windfield_vectors(tracks, cents),
+        "windfield_willoughby": windfield_willoughby(tracks, cents),
+    }
+    shapes = {
+        name: df._jdf.queryExecution().executedPlan().toString()
+        for name, df in frames.items()
+    }
+    shapes["tc_windfield_asymmetric"] = _plan(spark, "tc_windfield_asymmetric")
+    for name, plan in shapes.items():
+        fences = [
+            line for line in plan.splitlines()
+            if "Generate explode(array(" in line
+        ]
+        assert len(fences) == 1, (name, fences)
+        fence = fences[0]
+        assert re.search(r"Generate explode\(array\(\w+#\d+\)\)", fence), (
+            name, fence,
+        )
+        for fn in ("ASIN", "POWER", "EXP"):
+            assert fn not in fence, (name, fn, fence)
+
+
 def test_a9_dedup_is_partial_aggregate_not_window(spark):
     plan = _plan(spark, "a9_dedup_keep_last")
     # no window sort of full rows...

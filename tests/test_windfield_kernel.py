@@ -4,6 +4,8 @@ expression path elementwise — same formulas, two physical strategies
 
 from __future__ import annotations
 
+import pytest
+
 from ibf_typhoon_data_pipeline_spark.plans.typhoon import (
     gen_centroids,
     gen_tracks,
@@ -48,3 +50,65 @@ def test_intensity_reduce_is_max_per_member_centroid(spark):
     )
     assert reduced.exceptAll(direct).count() == 0
     assert direct.exceptAll(reduced).count() == 0
+
+
+@pytest.mark.parametrize("metric", ["geosphere", "equirect"])
+def test_expr_matches_inline_fence_exactly(spark, metric):
+    """windfield_expr computes the Holland tree in a projection below
+    the generator fence (so codegen subexpression elimination shares
+    its repeated terms) instead of inside the fence. The operations
+    and their order are unchanged, so every value must be EQUAL to
+    the inline-fence form — no float reassociation, no tolerance."""
+    from pyspark.sql import functions as F
+
+    from ibf_typhoon_data_pipeline_spark.functions.geo import haversine_km
+    from ibf_typhoon_data_pipeline_spark.operators.windfield import (
+        DEG_BOX,
+        V_THRESHOLD_MS,
+        _extent_col,
+        _wind_extent_kernel,
+        equirect_km,
+        grid_prune_pairs,
+        holland_wind_ms,
+        track_point_params,
+    )
+
+    tracks = gen_tracks(spark)
+    cents = gen_centroids(spark).select("centroid_id", "lat", "lon")
+    t = track_point_params(tracks).select(
+        "ens_id", "step",
+        F.col("lat").alias("t_lat"), F.col("lon").alias("t_lon"),
+        "pcen", "penv", "v_trans_ms", "rmw_km", "b_s",
+    )
+    c = cents.select(
+        "centroid_id", F.col("lat").alias("c_lat"), F.col("lon").alias("c_lon")
+    )
+    cond = F.col("c_lat").between(
+        F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX
+    ) & F.col("c_lon").between(F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX)
+    pairs = grid_prune_pairs(
+        c, t, cond,
+        _extent_col(
+            _wind_extent_kernel,
+            "rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat",
+        ),
+    )
+    dist_fn = haversine_km if metric == "geosphere" else equirect_km
+    wind = holland_wind_ms(
+        dist_fn(F.col("c_lat"), F.col("c_lon"), F.col("t_lat"), F.col("t_lon")),
+        F.col("rmw_km"), F.col("b_s"),
+        F.col("penv"), F.col("pcen"), F.col("t_lat"), F.col("v_trans_ms"),
+    )
+    inline = pairs.select(
+        "ens_id", "step", "centroid_id",
+        F.explode(F.array(wind)).alias("wind_ms"),
+    ).filter(F.col("wind_ms") > V_THRESHOLD_MS)
+
+    def rows(df):
+        return {
+            (r.ens_id, r.step, r.centroid_id): r.wind_ms for r in df.collect()
+        }
+
+    fenced = rows(windfield_expr(tracks, cents, metric=metric))
+    assert fenced
+    assert fenced == rows(inline)
