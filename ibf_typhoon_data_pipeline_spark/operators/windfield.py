@@ -8,33 +8,35 @@ attenuated away from the eyewall (trop_cyclone.py:515-836 — semantics
 only; this is an independent implementation from the published
 equations).
 
-Two interchangeable physical strategies:
+Every pair-space windfield shares one pair builder:
+``grid_prune_pairs`` projects the centroids, applies the ±DEG_BOX bbox
+predicate (the anti-cartesian guard, SURVEY §4 X1) and prunes it
+further with a per-track-point wind-extent radius. ``bbox_pairs`` is
+the same predicate unpruned, as a broadcast theta-join.
 
-1. ``windfield_expr`` — the Spark-first path: per-track-point scalars
-   (translation speed from lead(), pressure tendency from lag(), b_s,
-   RMW estimate) as window + scalar expressions, then a broadcast
-   theta-join of track points × centroids bounded by the bbox
-   predicate (the anti-cartesian guard, SURVEY §4 X1), then the radial
-   profile as pure `F.*` math. Everything stays in whole-stage
-   codegen; it is also DuckDB-expressible, so the correctness gate
-   covers the physics.
+- ``windfield_expr`` — the Spark-first path: per-track-point scalars
+  (translation speed from lead(), pressure tendency from lag(), b_s,
+  RMW estimate) as window + scalar expressions, the pruned pair join,
+  then the radial profile as pure `F.*` math. Everything stays in
+  whole-stage codegen; it is also DuckDB-expressible, so the
+  correctness gate covers the physics.
 
-2. ``windfield_kernel`` — the same formulas vectorized in numpy under
-   ``applyInPandas`` over (ens_id) groups, centroids broadcast —
-   the shape the reference's per-track process pool takes on Spark
-   (X4: repartition replaces pathos). Used to cross-check the expr
-   path and as the template for kernels that genuinely can't be
-   expressions (cubic splines, XGBoost inference).
+- ``windfield_kernel`` — the same formulas vectorized in numpy under
+  ``applyInPandas`` over (ens_id) groups — the shape the reference's
+  per-track process pool takes on Spark (X4: repartition replaces
+  pathos). Used to cross-check the expr path and as the template for
+  kernels that genuinely can't be expressions (cubic splines, XGBoost
+  inference).
 
 Scale notes: the pair space is |track points| × |centroids within the
-per-point wind extent|. The default grid strategy equi-joins on
-2°-cell keys (track points exploded to the cells their prune box
-touches, each centroid hashed to one cell) with the exact bbox AND a
-per-point dynamic box — derived from the bisected threshold-crossing
-radius of the profile — as the residual condition, so pruning is a
-hash probe and the Holland expression runs only near the storm; track
-sides are tiny (52 members × ~40-480 points, ≤ a few cell copies
-each) and always broadcast. Output is the long skinny
+per-point wind extent|. ``grid_prune_pairs`` equi-joins on 2°-cell
+keys (track points exploded to the cells their prune box touches, each
+centroid hashed to one cell) with the exact bbox AND a per-point
+dynamic box — derived from the bisected threshold-crossing radius of
+the profile — as the residual condition, so pruning is a hash probe
+and the profile runs only near the storm; track sides are tiny (52
+members × ~40-480 points, ≤ a few cell copies each) and broadcast
+by default. Output is the long skinny
 ``windfield(ens_id, step, centroid_id, wind_ms)`` — relational
 sparsity replaces the reference's CSR matrix (rows below the 17.5 m/s
 threshold are dropped, mirroring eliminate_zeros at
@@ -161,6 +163,21 @@ def holland_wind_ms(
     return F.greatest(v_total, F.lit(0.0))
 
 
+def _holland_np(r_km, rmw_km, b_s, penv, pcen, lat, v_trans_ms):
+    """numpy twin of holland_wind_ms — identical formula, vectorized."""
+    import numpy as np
+
+    dp_pa = np.maximum(penv - pcen, 1.0) * 100.0
+    r_saf = np.maximum(r_km, 1.0)
+    r_m = r_saf * 1000.0
+    ratio_b = np.power(rmw_km / r_saf, b_s)
+    f_cor = np.abs(2.0 * CORIOLIS_OMEGA * np.sin(np.radians(lat)))
+    rf2 = r_m * f_cor / 2.0
+    v_g = np.sqrt(b_s / RHO_AIR * ratio_b * dp_pa * np.exp(1.0 - ratio_b) + rf2 * rf2) - rf2
+    v = v_g + v_trans_ms * np.minimum(1.0, rmw_km / r_saf)
+    return np.maximum(v, 0.0)
+
+
 # Largest distance a ±DEG_BOX bbox can contain: √2·5.5°·111.19 km/°.
 WIND_EXTENT_CAP_KM = 871.0
 # km per degree LOWER bound shared by both metrics (haversine 111.127,
@@ -170,8 +187,8 @@ KM_PER_DEG_LB = 111.0
 
 
 def _wind_extent_kernel(rmw, b_s, penv, pcen, vt, lat, thr=V_THRESHOLD_MS):
-    """Vectorized numpy twin of ``holland_wind_ms`` bisected for the
-    radius where the profile crosses V_THRESHOLD_MS. v_total is
+    """``_holland_np`` (the numpy twin of ``holland_wind_ms``) bisected
+    for the radius where the profile crosses V_THRESHOLD_MS. v_total is
     monotone decreasing beyond rmw (dv_g/dr = a'/(2s) + c'(c/s − 1)
     with a' ≤ 0, c ≤ s, and the attenuated translation term decreasing
     too), so every r > r_hi is strictly below threshold and pruning
@@ -179,18 +196,8 @@ def _wind_extent_kernel(rmw, b_s, penv, pcen, vt, lat, thr=V_THRESHOLD_MS):
     numpy↔JVM libm ulp disagreement near the crossing."""
     import numpy as np
 
-    dp_pa = np.maximum(penv - pcen, 1.0) * 100.0
-
     def v_total(r):
-        r_c = np.maximum(r, 1.0)
-        x_b = (rmw / r_c) ** b_s
-        rf2 = r_c * 1000.0 * np.abs(
-            2.0 * CORIOLIS_OMEGA * np.sin(np.radians(lat))
-        ) / 2.0
-        v_g = np.sqrt(
-            b_s / RHO_AIR * x_b * dp_pa * np.exp(1.0 - x_b) + rf2 * rf2
-        ) - rf2
-        return np.maximum(v_g + vt * np.minimum(1.0, rmw / r_c), 0.0)
+        return _holland_np(r, rmw, b_s, penv, pcen, lat, vt)
 
     lo = rmw.astype("float64").copy()
     hi = np.full(len(rmw), WIND_EXTENT_CAP_KM)
@@ -263,18 +270,57 @@ def _extent_col(kernel, *cols: str) -> Column:
     return _extent(*cols)
 
 
+# Grid-cell edge (degrees) of the pair join's equi key.
+GRID_CELL_DEG = 2.0
+
+
+def _centroid_side(centroids: DataFrame) -> DataFrame:
+    return centroids.select(
+        "centroid_id",
+        F.col("lat").alias("c_lat"),
+        F.col("lon").alias("c_lon"),
+    )
+
+
+def _bbox_cond() -> Column:
+    """The X1 anti-cartesian guard: centroid within ±DEG_BOX of the
+    track point. Written as c BETWEEN t±box (not c−t BETWEEN ±box) so
+    the oracle SQL evaluates the bit-identical float comparison."""
+    return F.col("c_lat").between(
+        F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX
+    ) & F.col("c_lon").between(
+        F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX
+    )
+
+
+def bbox_pairs(centroids: DataFrame, t: DataFrame) -> DataFrame:
+    """Unpruned (centroid × track-point) pairs: the ±DEG_BOX predicate
+    as a broadcast theta-join (a nested loop over |C|×|T|). The
+    reference's pair space, and what ``grid_prune_pairs`` must equal
+    after the output threshold.
+
+    ``centroids`` carries (centroid_id, lat, lon); ``t`` carries t_lat,
+    t_lon and whatever per-point columns the profile needs. Output:
+    centroid_id, c_lat, c_lon plus every column of ``t``."""
+    return _centroid_side(centroids).join(F.broadcast(t), _bbox_cond())
+
+
 def grid_prune_pairs(
-    c: DataFrame, t: DataFrame, cond: Column, r_hi: Column,
-    cell: float = 2.0, broadcast: bool = True,
+    centroids: DataFrame, t: DataFrame, r_hi: Column, broadcast: bool = True,
 ) -> DataFrame:
     """(centroid × track-point) candidate pairs via a grid-cell HASH
-    join bounded by a per-track-point prune radius.
+    join bounded by a per-track-point prune radius — the one pair
+    builder every pruned windfield goes through.
 
-    ``r_hi`` is a conservative wind-extent radius (km): every pair
-    farther apart than r_hi must be below the output threshold, so the
-    dynamic box drops ONLY rows the threshold filter would drop and
-    the surviving pairs are identical to the plain bbox theta-join
-    (``cond`` stays as part of the residual condition).
+    Same inputs and output columns as ``bbox_pairs`` (plus
+    ``__``-prefixed prune columns). This function owns the centroid
+    projection and the ±DEG_BOX bbox predicate, which stays in the
+    residual condition as a BETWEEN so the DuckDB oracle makes the
+    bit-identical float comparison. ``r_hi`` is a conservative
+    wind-extent radius (km): every pair farther apart than r_hi must be
+    below the output threshold, so the dynamic box drops ONLY rows the
+    threshold filter would drop and the surviving pairs are identical
+    to ``bbox_pairs``.
 
     Geometry: dist ≥ KM_PER_DEG_LB·|Δlat| and ≥
     KM_PER_DEG_LB·cos(φ̄)·|Δlon| for both supported metrics; φ̄ is
@@ -282,9 +328,11 @@ def grid_prune_pairs(
     box_lon is conservative too. A [t±box] interval only intersects
     cells floor((t−box)/cell)..floor((t+box)/cell) (x/cell and floor
     are monotone and exact in IEEE), so the exploded cell copies can
-    never miss a box-passing centroid. Track rows stay broadcast (≤ a
-    few cell copies × a few 10⁴ rows); the equi part becomes the hash
-    key and the pair space is Σ per-cell products instead of |C|×|T|.
+    never miss a box-passing centroid. Each track point explodes to
+    the cells its dynamic box touches (2–4 per axis for typical
+    extents, at most 7×7 when the box reaches DEG_BOX), each centroid
+    hashes to exactly one GRID_CELL_DEG cell, and the pair space is
+    Σ per-cell products instead of |C|×|T|.
     """
     t = t.withColumn("__r_hi", r_hi)
     box_lat = F.least(F.lit(DEG_BOX), F.col("__r_hi") / KM_PER_DEG_LB)
@@ -309,7 +357,8 @@ def grid_prune_pairs(
 
     def _cells(col: Column, box: Column) -> Column:
         return F.sequence(
-            F.floor((col - box) / cell), F.floor((col + box) / cell)
+            F.floor((col - box) / GRID_CELL_DEG),
+            F.floor((col + box) / GRID_CELL_DEG),
         )
 
     tg = (
@@ -320,9 +369,9 @@ def grid_prune_pairs(
             "__t_lonc", F.explode(_cells(F.col("t_lon"), F.col("__box_lon")))
         )
     )
-    cg = c.withColumn(
-        "__c_latc", F.floor(F.col("c_lat") / cell)
-    ).withColumn("__c_lonc", F.floor(F.col("c_lon") / cell))
+    cg = _centroid_side(centroids).withColumn(
+        "__c_latc", F.floor(F.col("c_lat") / GRID_CELL_DEG)
+    ).withColumn("__c_lonc", F.floor(F.col("c_lon") / GRID_CELL_DEG))
     # broadcast hint: legitimate for single-event production plans
     # (track points bounded by 52 members x 481 positions — the
     # hygiene allowlist's bounded-by-construction case). broadcast=
@@ -336,7 +385,7 @@ def grid_prune_pairs(
         F.broadcast(tg) if broadcast else tg,
         (F.col("__c_latc") == F.col("__t_latc"))
         & (F.col("__c_lonc") == F.col("__t_lonc"))
-        & cond
+        & _bbox_cond()
         & (F.abs(F.col("c_lat") - F.col("t_lat")) <= F.col("__box_lat"))
         & (F.abs(F.col("c_lon") - F.col("t_lon")) <= F.col("__box_lon")),
     )
@@ -393,29 +442,22 @@ def windfield_expr(
     threshold_ms: float = V_THRESHOLD_MS,
     keys: list[str] | None = None,
     metric: str = "geosphere",
-    join: str = "grid",
     broadcast: bool = True,
 ) -> DataFrame:
-    """K1 as a broadcast join + codegen expressions.
+    """K1 as a pruned pair join + codegen expressions.
 
     ``tracks`` must carry (ens_id, step, lat, lon, vmax, pcen, penv);
     ``centroids`` (centroid_id, lat, lon). Output: one row per
     (ens_id, step, centroid_id) with wind_ms above threshold.
     ``metric``: "geosphere" (haversine) or "equirect" — the
     reference's dist_approx switch (equirect is CLIMADA's default).
-    ``join``: "grid" (default) equi-joins on 2°-cell grid keys — each
-    track point explodes to the cells its dynamic bbox can touch
-    (2–4 per axis for typical extents; worst case 7×7 ≈ 49 copies
-    only when r_hi hits WIND_EXTENT_CAP_KM and the box reaches
-    DEG_BOX = 5.5°), each centroid hashes to exactly one cell, so the
-    bbox pruning is a
-    hash probe instead of |centroids|×|track points| nested-loop
-    condition evaluations; the exact bbox predicate remains as the
-    residual condition, so the surviving pairs are IDENTICAL to
-    ``join="nested"`` (the plain theta-join, kept for plan
-    comparison). At the production envelope (47k centroids × 25k
-    interpolated positions = 1.18e9 raw pairs) grid cuts the join from
-    ~27 s to the cost of the surviving pairs alone.
+    Pairs come from ``grid_prune_pairs`` with the bisected Holland
+    extent as the prune radius, so the rows are identical to the same
+    profile over the unpruned ``bbox_pairs``. At the production
+    envelope (47k centroids × 25k interpolated positions = 1.18e9 raw
+    pairs) the grid join costs about the surviving pairs alone, where
+    the nested loop took ~27 s. ``broadcast=False`` leaves the pair
+    join's strategy to AQE (see ``grid_prune_pairs``).
     """
     keys = keys or ["ens_id"]
     tp = track_point_params(tracks, keys=keys)
@@ -426,33 +468,14 @@ def windfield_expr(
         F.col("lon").alias("t_lon"),
         "pcen", "penv", "v_trans_ms", "rmw_km", "b_s",
     )
-    # bbox predicate INSIDE the join condition — X1 anti-cartesian
-    # guard. Written as c BETWEEN t±box (not c-t BETWEEN ±box) so the
-    # oracle SQL evaluates the bit-identical float comparison.
-    cond = (
-        F.col("c_lat").between(
-            F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX
-        )
-        & F.col("c_lon").between(
-            F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX
-        )
+    pairs = grid_prune_pairs(
+        centroids, t,
+        _extent_col(
+            lambda *a: _wind_extent_kernel(*a, thr=threshold_ms),
+            "rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat",
+        ),
+        broadcast=broadcast,
     )
-    c = centroids.select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
-    if join == "grid":
-        pairs = grid_prune_pairs(
-            c, t, cond,
-            _extent_col(
-                lambda *a: _wind_extent_kernel(*a, thr=threshold_ms),
-                "rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat",
-            ),
-            broadcast=broadcast,
-        )
-    else:
-        pairs = c.join(F.broadcast(t), cond)
     dist_fn = haversine_km if metric == "geosphere" else equirect_km
     r_km = dist_fn(
         F.col("c_lat"), F.col("c_lon"), F.col("t_lat"), F.col("t_lon")
@@ -517,7 +540,7 @@ def windfield_willoughby(
     threshold_ms: float = V_THRESHOLD_MS,
     keys: list[str] | None = None,
 ) -> DataFrame:
-    """K5 windfield: same broadcast theta-join + bbox-guard shape as
+    """K5 windfield: same pruned pair join (``grid_prune_pairs``) as
     windfield_expr, Willoughby profile instead of Holland — the two
     kernels are drop-in alternatives exactly as in the reference
     (python Holland vs R Willoughby paths)."""
@@ -529,21 +552,12 @@ def windfield_willoughby(
         F.col("lon").alias("t_lon"),
         "vmax",
     )
-    cond = (
-        F.col("c_lat").between(
-            F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX
-        )
-        & F.col("c_lon").between(
-            F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX
-        )
-    )
-    c = centroids.select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
     pairs = grid_prune_pairs(
-        c, t, cond, _extent_col(lambda *a: _willoughby_extent_kernel(*a, thr=threshold_ms), "vmax", "t_lat")
+        centroids, t,
+        _extent_col(
+            lambda *a: _willoughby_extent_kernel(*a, thr=threshold_ms),
+            "vmax", "t_lat",
+        ),
     )
     r_km = haversine_km(
         F.col("c_lat"), F.col("c_lon"), F.col("t_lat"), F.col("t_lon")
@@ -572,7 +586,7 @@ def windfield_vectors(
     counterclockwise tangential unit vector is (−dy/r, dx/r), flipped
     in the southern hemisphere. The translational unit vector comes
     from the lead-segment kinematics (W2) in the same equirect frame.
-    Same broadcast theta-join + bbox guard as every kernel.
+    Same pruned pair join (``grid_prune_pairs``) as windfield_expr.
     """
     keys = keys or ["ens_id"]
     km_deg = 111.12
@@ -599,21 +613,12 @@ def windfield_vectors(
         F.when(seg_len > 0.0, seg_dx / seg_len).otherwise(F.lit(0.0)).alias("hx"),
         F.when(seg_len > 0.0, seg_dy / seg_len).otherwise(F.lit(0.0)).alias("hy"),
     )
-    cond = (
-        F.col("c_lat").between(F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX)
-        & F.col("c_lon").between(F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX)
-    )
-    c = centroids.select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
     # |u,v| ≤ v_g + min(1, rmw/r)·vt — the scalar profile the Holland
     # extent kernel bisects — so the per-point prune box is
     # conservative for the vector magnitude too (triangle inequality).
     pairs = (
         grid_prune_pairs(
-            c, t, cond,
+            centroids, t,
             _extent_col(
                 lambda *a: _wind_extent_kernel(*a, thr=threshold_ms),
                 "rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat",
@@ -744,10 +749,11 @@ def windfield_willoughby_blend(
     threshold_ms: float = V_THRESHOLD_MS,
     keys: list[str] | None = None,
 ) -> DataFrame:
-    """K5 at full W2006 fidelity. Same broadcast theta-join + bbox
-    guard as the other kernels; the per-POINT Newton solve runs on the
-    tiny track side before the join, so the pair space sees only the
-    precomputed (rmax, x1, nn, aa, r1, bw) scalars."""
+    """K5 at full W2006 fidelity, over the unpruned ``bbox_pairs`` (no
+    extent kernel bounds the blended profile); the per-POINT Newton
+    solve runs on the tiny track side before the join, so the pair
+    space sees only the precomputed (rmax, x1, nn, aa, r1, bw)
+    scalars."""
     keys = keys or ["ens_id"]
     wp = (
         tracks.select(*keys, "step", "lat", "lon", "vmax")
@@ -768,16 +774,7 @@ def windfield_willoughby_blend(
         F.col("lat").alias("t_lat"), F.col("lon").alias("t_lon"),
         "vmax", "rmax", "x1", "nn", "aa", "bw", "r1",
     )
-    cond = (
-        F.col("c_lat").between(F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX)
-        & F.col("c_lon").between(F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX)
-    )
-    c = centroids.select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
-    pairs = c.join(F.broadcast(t), cond).withColumn(
+    pairs = bbox_pairs(centroids, t).withColumn(
         "r",
         F.greatest(
             haversine_km(
@@ -798,21 +795,6 @@ def windfield_willoughby_blend(
 
 
 # ------------------------------------------------------------------ kernel
-def _holland_np(r_km, rmw_km, b_s, penv, pcen, lat, v_trans_ms):
-    """numpy twin of holland_wind_ms — identical formula, vectorized."""
-    import numpy as np
-
-    dp_pa = np.maximum(penv - pcen, 1.0) * 100.0
-    r_saf = np.maximum(r_km, 1.0)
-    r_m = r_saf * 1000.0
-    ratio_b = np.power(rmw_km / r_saf, b_s)
-    f_cor = np.abs(2.0 * CORIOLIS_OMEGA * np.sin(np.radians(lat)))
-    rf2 = r_m * f_cor / 2.0
-    v_g = np.sqrt(b_s / RHO_AIR * ratio_b * dp_pa * np.exp(1.0 - ratio_b) + rf2 * rf2) - rf2
-    v = v_g + v_trans_ms * np.minimum(1.0, rmw_km / r_saf)
-    return np.maximum(v, 0.0)
-
-
 def windfield_kernel(
     tracks: DataFrame,
     centroids: DataFrame,

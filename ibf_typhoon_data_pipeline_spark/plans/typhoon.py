@@ -4100,23 +4100,9 @@ def tc_windfield_asymmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vmax_gl AS vmax", "rmax", "x1", "nn", "aa",
         "tcspd_u", "tcspd_v",
     )
-    c = gen_centroids(spark).select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
-    cond = (
-        F.col("c_lat").between(
-            F.col("t_lat") - 5.5, F.col("t_lat") + 5.5
-        )
-        & F.col("c_lon").between(
-            F.col("t_lon") - 5.5, F.col("t_lon") + 5.5
-        )
-    )
     pruned = grid_prune_pairs(
-        c,
+        gen_centroids(spark),
         t,
-        cond,
         _extent_col(
             lambda *a: _willoughby_extent_kernel(*a, thr=10.0),
             "vmax",

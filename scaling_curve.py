@@ -302,6 +302,14 @@ def main() -> None:
             best = float("inf")
             try:
                 _ty.N_MEMBERS = members
+                # the leg must really run on the amplified ensemble,
+                # or a flat time records as a false "linear" scaleup
+                n_rows = _ty.gen_tracks(spark).count()
+                if n_rows != members * _ty.N_STEPS:
+                    raise RuntimeError(
+                        f"{name}: generator produced {n_rows} track rows, "
+                        f"expected {members} members x {_ty.N_STEPS} steps"
+                    )
                 for _ in range(2):
                     t0 = time.perf_counter()
                     fn(spark, SFS[1]).write.format("noop").mode(

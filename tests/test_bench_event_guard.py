@@ -4,21 +4,26 @@ The guard pins the RATIO envelope/probe instead of absolute seconds,
 so sandbox CPU weather cancels. These tests prove the mechanism:
 
 1. pure-function contract of `ratio_warning`;
-2. on a mini production envelope, bypassing `grid_prune_pairs`
-   (``join="nested"``) inflates the in-session ratio past the 1.5×
-   factor — i.e. the guard fires on a REAL pruning regression while
-   staying quiet on the shipped plan, measured in the same JVM so
-   machine drift cannot explain the gap.
+2. on a mini production envelope, bypassing `grid_prune_pairs` (the
+   same physics over the unpruned ``bbox_pairs``) inflates the
+   in-session ratio past the 1.5× factor — i.e. the guard fires on a
+   REAL pruning regression while staying quiet on the shipped plan,
+   measured in the same JVM so machine drift cannot explain the gap.
 """
 
 import time
 
 from pyspark.sql import functions as F
 
+from ibf_typhoon_data_pipeline_spark.functions.geo import haversine_km
 from ibf_typhoon_data_pipeline_spark.operators.bench_probe import (
     ratio_warning,
 )
 from ibf_typhoon_data_pipeline_spark.operators.windfield import (
+    _fenced,
+    bbox_pairs,
+    holland_wind_ms,
+    track_point_params,
     windfield_expr,
 )
 from ibf_typhoon_data_pipeline_spark.plans.typhoon import gen_tracks
@@ -72,6 +77,26 @@ def _track_points(spark):
     return interp
 
 
+def _nested_windfield(tracks, cents, threshold_ms):
+    """windfield_expr's physics over the unpruned bbox theta-join."""
+    t = track_point_params(tracks).select(
+        "ens_id", "step",
+        F.col("lat").alias("t_lat"), F.col("lon").alias("t_lon"),
+        "pcen", "penv", "v_trans_ms", "rmw_km", "b_s",
+    )
+    wind = holland_wind_ms(
+        haversine_km(
+            F.col("c_lat"), F.col("c_lon"), F.col("t_lat"), F.col("t_lon")
+        ),
+        F.col("rmw_km"), F.col("b_s"),
+        F.col("penv"), F.col("pcen"), F.col("t_lat"), F.col("v_trans_ms"),
+    )
+    return _fenced(
+        bbox_pairs(cents, t), ["ens_id", "step", "centroid_id"],
+        wind, "wind_ms",
+    ).filter(F.col("wind_ms") > threshold_ms)
+
+
 def _envelope(spark, tracks, cents, join: str) -> tuple[float, int]:
     # threshold 50 m/s: the shared survivor work (Holland on passing
     # pairs) shrinks and the dynamic prune radius tightens, so the
@@ -79,7 +104,10 @@ def _envelope(spark, tracks, cents, join: str) -> tuple[float, int]:
     # candidate-pair scan the grid join prunes and the nested loop
     # pays in full (measured 2.0 s grid vs 15.4 s nested at this
     # config; outputs identical).
-    wf = windfield_expr(tracks, cents, threshold_ms=50.0, join=join)
+    if join == "grid":
+        wf = windfield_expr(tracks, cents, threshold_ms=50.0)
+    else:
+        wf = _nested_windfield(tracks, cents, threshold_ms=50.0)
     t0 = time.perf_counter()
     n = wf.groupBy("ens_id", "centroid_id").agg(
         F.max("wind_ms").alias("i")

@@ -58,15 +58,17 @@ def test_expr_matches_inline_fence_exactly(spark, metric):
     the generator fence (so codegen subexpression elimination shares
     its repeated terms) instead of inside the fence. The operations
     and their order are unchanged, so every value must be EQUAL to
-    the inline-fence form — no float reassociation, no tolerance."""
+    the inline-fence form — no float reassociation, no tolerance.
+    The grid prune drops only sub-threshold pairs, so the same tree
+    over the unpruned bbox join must give the same rows too."""
     from pyspark.sql import functions as F
 
     from ibf_typhoon_data_pipeline_spark.functions.geo import haversine_km
     from ibf_typhoon_data_pipeline_spark.operators.windfield import (
-        DEG_BOX,
         V_THRESHOLD_MS,
         _extent_col,
         _wind_extent_kernel,
+        bbox_pairs,
         equirect_km,
         grid_prune_pairs,
         holland_wind_ms,
@@ -80,14 +82,8 @@ def test_expr_matches_inline_fence_exactly(spark, metric):
         F.col("lat").alias("t_lat"), F.col("lon").alias("t_lon"),
         "pcen", "penv", "v_trans_ms", "rmw_km", "b_s",
     )
-    c = cents.select(
-        "centroid_id", F.col("lat").alias("c_lat"), F.col("lon").alias("c_lon")
-    )
-    cond = F.col("c_lat").between(
-        F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX
-    ) & F.col("c_lon").between(F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX)
     pairs = grid_prune_pairs(
-        c, t, cond,
+        cents, t,
         _extent_col(
             _wind_extent_kernel,
             "rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat",
@@ -99,10 +95,12 @@ def test_expr_matches_inline_fence_exactly(spark, metric):
         F.col("rmw_km"), F.col("b_s"),
         F.col("penv"), F.col("pcen"), F.col("t_lat"), F.col("v_trans_ms"),
     )
-    inline = pairs.select(
-        "ens_id", "step", "centroid_id",
-        F.explode(F.array(wind)).alias("wind_ms"),
-    ).filter(F.col("wind_ms") > V_THRESHOLD_MS)
+
+    def inline(p):
+        return p.select(
+            "ens_id", "step", "centroid_id",
+            F.explode(F.array(wind)).alias("wind_ms"),
+        ).filter(F.col("wind_ms") > V_THRESHOLD_MS)
 
     def rows(df):
         return {
@@ -111,4 +109,5 @@ def test_expr_matches_inline_fence_exactly(spark, metric):
 
     fenced = rows(windfield_expr(tracks, cents, metric=metric))
     assert fenced
-    assert fenced == rows(inline)
+    assert fenced == rows(inline(pairs))
+    assert fenced == rows(inline(bbox_pairs(cents, t)))
